@@ -77,11 +77,15 @@ def point_exprs(id_col: Column | str) -> tuple[Column, Column]:
     return lat.cast("long").alias("lat_e4"), lon.cast("long").alias("lon_e4")
 
 
-def kring_expr(lat_e4: Column | str, lon_e4: Column | str, res: int, k: int = 1) -> Column:
+def kring_expr(
+    lat_e4: Column | str, lon_e4: Column | str, res: int, k: int | Column = 1
+) -> Column:
     """Array of (2k+1)^2 neighbor cell ids (lon wraps, pole rows dropped).
 
     Pure Catalyst: builds the offset grid with `sequence` + `transform`
-    + `flatten`, filters pole fall-off with `filter`. No Python.
+    + `flatten`, filters pole fall-off with `filter`. No Python. `k` is
+    a constant or a per-row integer Column (knn_join's per-query ring
+    radius); for 2k+1 > 2^(res+1) the wrapped lon offsets repeat cells.
     """
     nx, ny = 2 ** (res + 1), 2**res
     x = F.pmod(
@@ -91,7 +95,9 @@ def kring_expr(lat_e4: Column | str, lon_e4: Column | str, res: int, k: int = 1)
         F.lit(nx),
     )
     y = cell_y_expr(lat_e4, res)
-    offs = F.sequence(F.lit(-k), F.lit(k))
+    offs = (
+        F.sequence(F.lit(-k), F.lit(k)) if isinstance(k, int) else F.sequence(-k, k)
+    )
     pairs = F.flatten(
         F.transform(offs, lambda dy: F.transform(offs, lambda dx: F.struct(dy.alias("dy"), dx.alias("dx"))))
     )

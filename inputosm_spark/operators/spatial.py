@@ -13,9 +13,9 @@ Scale design (100 TB corpus, 1000 executors):
   broadcast, so the point table is never shuffled at all; with a huge
   polygon side the join is a shuffled equi-join on cell where AQE
   splits skewed cells (dense metro cells are the known hot keys).
-* kNN: k-ring expansion multiplies the small QUERY side (9x, 25x, …),
-  never the big point side; escalation re-processes only unfilled
-  queries, and the final fallback brute-forces only stragglers.
+* kNN: one pass. A per-cell point count fixes each query cell's
+  proven ring radius, so the ring multiplies only the small QUERY side,
+  never the big point side, and no query is ever re-processed.
 * exact refine runs per Arrow batch with numpy vectorized over points,
   grouped by polygon within the batch — no per-row Python.
 """
@@ -38,12 +38,6 @@ from pyspark.sql.types import (
 
 from inputosm_spark import geo
 from inputosm_spark.functions import cells
-
-#: (applicationId, semanticHash of the prepared point plan) ->
-#: (n_points, approx occupied cells): the kNN auto-ring PLAN-CHOICE
-#: statistic (see knn_join) — immutable input, performance-only
-#: decision, applicationId-fenced; no query results are cached.
-_DENSITY_MEMO: dict[tuple[str, int], tuple[int, int]] = {}
 
 # ---------------------------------------------------------------------------
 # polygon covering cells (polyfill) — Arrow UDF over numpy
@@ -234,133 +228,168 @@ def pip_join(
 # ---------------------------------------------------------------------------
 
 
+def knn_cell_widths(res: int) -> tuple[int, int]:
+    """(w_min, w_max): integer e4 bounds on the res-grid cell edge,
+    floored and ceiled over both axes (the real edges are 2*180/nx and
+    2*90/ny degrees)."""
+    nx, ny = 2 ** (res + 1), 2**res
+    w_min = min((2 * geo.LON_MAX_E4) // nx, (2 * geo.LAT_MAX_E4) // ny)
+    w_max = max(-(-2 * geo.LON_MAX_E4 // nx), -(-2 * geo.LAT_MAX_E4 // ny))
+    return w_min, w_max
+
+
+def knn_ring_radii(counts: np.ndarray, k: int, res: int) -> np.ndarray:
+    """Proven kNN ring radius per cell of a (ny, nx) point-count grid.
+
+    For each cell, r is the smallest radius whose (2r+1)^2 square
+    (clipped at the grid edges, not wrapped in lon) holds >= k points;
+    every such point lies within sqrt(2)*(r+1)*w_max of any query in
+    the cell, so the k-th distance is at most that. R is the smallest
+    integer with R*w_min >= sqrt(2)*(r+1)*w_max, and every point
+    outside ring R is farther than R*w_min: the top-k inside ring R is
+    exact. R is capped so that 2R+1 <= ny (the ring never spans the
+    grid, and its wrapped lon offsets never repeat a cell); cells with
+    no radius under the cap get -1 (brute force).
+    """
+    ny, nx = counts.shape
+    w_min, w_max = knn_cell_widths(res)
+    r_cap = (ny - 1) // 2
+    rr = np.arange(r_cap + 1, dtype=np.int64)
+    need = 2 * ((rr + 1) * w_max) ** 2
+    big = np.ceil(np.sqrt(need) / w_min).astype(np.int64)
+    big += (big * w_min) ** 2 < need  # float ceil may fall one short
+    r_hi = int(np.searchsorted(big, r_cap, side="right")) - 1
+    if r_hi < 0:
+        return np.full((ny, nx), -1, dtype=np.int64)
+    pre = np.zeros((ny + 1, nx + 1), dtype=np.int64)
+    pre[1:, 1:] = counts.cumsum(0).cumsum(1)
+    yy, xx = np.mgrid[0:ny, 0:nx]
+
+    def square(r):
+        y0, y1 = np.clip(yy - r, 0, ny), np.clip(yy + r + 1, 0, ny)
+        x0, x1 = np.clip(xx - r, 0, nx), np.clip(xx + r + 1, 0, nx)
+        return pre[y1, x1] - pre[y0, x1] - pre[y1, x0] + pre[y0, x0]
+
+    # per-cell binary search for the smallest r (square counts grow with r)
+    lo = np.zeros((ny, nx), dtype=np.int64)
+    hi = np.full((ny, nx), r_hi + 1, dtype=np.int64)
+    while (open_ := lo < hi).any():
+        mid = (lo + hi) // 2
+        ok = square(mid) >= k
+        hi = np.where(open_ & ok, mid, hi)
+        lo = np.where(open_ & ~ok, mid + 1, lo)
+    return np.where(lo <= r_hi, big[np.minimum(lo, r_hi)], -1)
+
+
 def knn_join(
     queries: DataFrame,
     points: DataFrame,
     k: int,
     res: int = 6,
-    max_rounds: int = 4,
     id_col: str = "id",
     qid_col: str = "qid",
-    auto_ring: bool = True,
 ) -> DataFrame:
     """k nearest points for each query row, exact.
 
     queries: (qid, lat_e4, lon_e4); points: (id, lat_e4, lon_e4).
     Distance = exact integer squared planar e4 distance (dist2_e4),
     ties broken by point id — a total order, so the result set is
-    engine-independent and oracle-checkable.
+    engine-independent and oracle-checkable. Fewer than k points in
+    total return every point, ranked.
 
-    Algorithm (grid kNN): explode each query's ring-r neighborhood ->
-    equi-join points on cell -> window top-k. A result is PROVEN exact
-    when the k-th distance is <= the minimum possible distance to any
-    cell outside the ring; unfinished queries escalate to a wider ring
-    (2r), and after `max_rounds` the few stragglers are finished by a
-    broadcast brute-force pass. Only the (small) query side is ever
-    replicated; the big point side is scanned with an equi-join.
+    One pass: per-cell point counts (one aggregate of <= nx*ny rows)
+    give each cell a ring radius R (knn_ring_radii); each query
+    explodes its ring R, equi-joins the points on cell, keeps a window
+    top-k. Exact: ring R holds >= k points nearer than R*w_min and
+    every point outside it is farther. The plan re-checks that bound
+    and raises if it fails; cells with no radius are brute-forced.
+    The count grid is dense (nx*ny cells, 8192 at res 6).
     """
     nx, ny = 2 ** (res + 1), 2**res
-    # conservative min separation to outside-of-ring cells (e4 units)
-    w_lon = (2 * geo.LON_MAX_E4) // nx
-    w_lat = (2 * geo.LAT_MAX_E4) // ny
-    w_min = min(w_lon, w_lat)
+    w_min, _ = knn_cell_widths(res)
 
     from inputosm_spark.operators import ensure_parallelism
 
-    pts = ensure_parallelism(points).select(
+    base = points.select(
         F.col(id_col).alias("__pid"),
         F.col("lat_e4").alias("__plat"),
         F.col("lon_e4").alias("__plon"),
         cells.cell_id_expr("lat_e4", "lon_e4", res).alias("__cell"),
     )
+    pts = ensure_parallelism(base)
+    # the count grid keeps lon == +180 on the east edge, where it lies;
+    # the join cell wraps it to column 0, which the ring reaches by wrap
+    counts = (
+        base.groupBy("__cell", (F.col("__plon") >= geo.LON_MAX_E4).alias("__east"))
+        .count()
+        .collect()
+    )
+    grid = np.zeros((ny, nx), dtype=np.int64)
+    if counts:
+        _, y, x = geo.unpack_cell(np.array([r[0] for r in counts], dtype=np.int64))
+        x = np.where([r[1] for r in counts], nx - 1, x)
+        np.add.at(grid, (y, x), [r[2] for r in counts])
+    radii = knn_ring_radii(grid, k, res)
+    yy, xx = np.mgrid[0:ny, 0:nx]
+    lookup = queries.sparkSession.createDataFrame(
+        pd.DataFrame(
+            {
+                "__cell": geo.pack_cell(res, yy.ravel(), xx.ravel()),
+                "__R": radii.ravel().astype(np.int32),
+            }
+        )
+    )
 
-    remaining = queries.select(
+    qs = queries.select(
         F.col(qid_col).alias("__qid"),
         F.col("lat_e4").alias("__qlat"),
         F.col("lon_e4").alias("__qlon"),
-    )
-    results = None
-    ring = 1
-    if auto_ring:
-        # density-aware starting ring: one cheap agg over the point
-        # side estimates points per OCCUPIED cell; pick the smallest
-        # ring whose (2r+1)^2 cells are expected to hold ~2k points,
-        # skipping escalation rounds that predictably come up short
-        # (clustered data makes the occupied-cell average the right
-        # density, not the whole-world one). The statistic is a
-        # PLAN-CHOICE input over an immutable point plan (the ring
-        # schedule only changes how the exact answer is found — the
-        # k-th-distance bound proves exactness at every ring), so it
-        # is memoized per (applicationId, semanticHash) like the
-        # partition probe: the ~0.3 s driver job runs once per
-        # distinct point plan, never per invocation. No results are
-        # cached.
-        sc = pts.sparkSession.sparkContext
-        key = (sc.applicationId, pts.semanticHash())
-        st = _DENSITY_MEMO.get(key)
-        if st is None:
-            stats = pts.agg(
-                F.count("*").alias("n"),
-                F.approx_count_distinct("__cell", 0.05).alias("c"),
-            ).first()
-            st = (stats.n or 0, stats.c or 0)
-            _DENSITY_MEMO[key] = st
-        if st[0] and st[1]:
-            per_cell = max(st[0] / st[1], 1e-9)
-            import math
+        cells.cell_id_expr("lat_e4", "lon_e4", res).alias("__cell"),
+    ).join(F.broadcast(lookup), "__cell")
 
-            ring = max(1, math.ceil((math.sqrt(2 * k / per_cell) - 1) / 2))
-            # never start beyond what max_rounds' doubling could reach
-            ring = min(ring, 2 ** (max_rounds - 1))
-    for _ in range(max_rounds):
-        cand = (
-            remaining.withColumn(
-                "__cells", cells.kring_expr("__qlat", "__qlon", res, ring)
-            )
-            .withColumn("__cell", F.explode("__cells"))
-            .drop("__cells")
-            .join(pts, "__cell")
-            .select(
-                "__qid",
-                "__qlat",
-                "__qlon",
-                "__pid",
-                cells.dist2_expr("__qlat", "__qlon", "__plat", "__plon").alias(
-                    "__d2"
-                ),
-            )
+    cand = (
+        qs.filter(F.col("__R") >= 0)
+        .select(
+            "__qid",
+            "__qlat",
+            "__qlon",
+            "__R",
+            F.explode(cells.kring_expr("__qlat", "__qlon", res, F.col("__R"))).alias(
+                "__cell"
+            ),
         )
-        w = Window.partitionBy("__qid").orderBy("__d2", "__pid")
-        # topk is at most |remaining| * k rows — materialize it once
-        # (localCheckpoint severs lineage so later rounds never re-run
-        # this round's big equi-join)
-        topk = (
-            cand.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .localCheckpoint(eager=True)
+        .join(pts, "__cell")
+        .select(
+            "__qid",
+            "__pid",
+            "__R",
+            cells.dist2_expr("__qlat", "__qlon", "__plat", "__plon").alias("__d2"),
         )
-        # proven-exact iff k found AND kth dist fits inside the ring bound
-        safe_d = (ring * w_min) ** 2
-        per_q = topk.groupBy("__qid").agg(
-            F.count("*").alias("__n"), F.max("__d2").alias("__dk")
+    )
+    w = Window.partitionBy("__qid").orderBy("__d2", "__pid")
+    ranked = (
+        cand.withColumn("__rn", F.row_number().over(w))
+        .withColumn("__n", F.count("*").over(Window.partitionBy("__qid")))
+        .filter(F.col("__rn") <= k)
+    )
+    # the radius proof in the plan: k candidates, k-th within R*w_min
+    reach = F.col("__R").cast("long") * F.lit(w_min)
+    broken = (F.col("__n") < k) | ((F.col("__rn") == k) & (F.col("__d2") > reach * reach))
+    results = ranked.select(
+        "__qid",
+        "__pid",
+        "__d2",
+        F.when(
+            broken,
+            F.raise_error(F.lit("knn_join: k-th distance outside the proven ring")),
         )
-        done_q = per_q.filter((F.col("__n") == k) & (F.col("__dk") <= safe_d)).select(
-            "__qid"
-        )
-        done = topk.join(F.broadcast(done_q), "__qid", "left_semi").select(
-            "__qid", "__pid", "__d2", "__rn"
-        )
-        results = done if results is None else results.unionAll(done)
-        remaining = remaining.join(
-            F.broadcast(done_q), "__qid", "left_anti"
-        ).localCheckpoint(eager=True)
-        if remaining.isEmpty():
-            break
-        ring *= 2
-    else:
-        # brute-force the stragglers: tiny query side x full point scan
-        cand = (
-            F.broadcast(remaining)
+        .otherwise(F.col("__rn"))
+        .alias("__rn"),
+    )
+    if (radii < 0).any():
+        # cells with no provable ring: tiny query side x full point scan
+        brute = (
+            F.broadcast(qs.filter(F.col("__R") < 0))
             .crossJoin(pts.drop("__cell"))
             .select(
                 "__qid",
@@ -369,14 +398,10 @@ def knn_join(
                     "__d2"
                 ),
             )
-        )
-        w = Window.partitionBy("__qid").orderBy("__d2", "__pid")
-        brute = (
-            cand.withColumn("__rn", F.row_number().over(w))
+            .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
-            .select("__qid", "__pid", "__d2", "__rn")
         )
-        results = brute if results is None else results.unionAll(brute)
+        results = results.unionAll(brute)
 
     return results.select(
         F.col("__qid").alias(qid_col),

@@ -84,3 +84,26 @@ def test_dist2_expr_matches_numpy(spark):
     out = df.select(cells.dist2_expr("a", "b", "c", "d").alias("d2")).collect()
     assert out[0].d2 == 25
     assert out[1].d2 == int(geo.dist2_e4(100, -200, -300, 400))
+
+
+def test_kring_expr_column_radius_matches_int(spark):
+    """A per-row Column radius builds the same ring, row for row, as
+    the constant int radius (knn_join passes one per query)."""
+    lat, lon = cells.point_exprs("id")
+    res = 6
+    df = spark.range(200).select(
+        "id", lat, lon, (F.col("id") % 4).cast("int").alias("r")
+    )
+    for k in range(4):
+        rows = (
+            df.filter(F.col("r") == k)
+            .select(
+                "id",
+                cells.kring_expr("lat_e4", "lon_e4", res, k).alias("a"),
+                cells.kring_expr("lat_e4", "lon_e4", res, F.col("r")).alias("b"),
+            )
+            .collect()
+        )
+        assert rows
+        for r in rows:
+            assert r.a == r.b, f"id {r.id} radius {k}"

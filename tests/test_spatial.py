@@ -78,20 +78,137 @@ def test_knn_join_exact_vs_bruteforce(spark, points, points_np):
 
 
 def test_knn_escalation_sparse_region(spark, points, points_np):
-    """Queries in empty regions must escalate rings (or brute-force)
+    """Queries in sparse regions get wide proven rings (or brute force)
     and still return exactly k correct neighbors."""
     ids, lat, lon = points_np
     # corners near the poles are sparse at res 6
     qs = [(0, 899_000, -1_799_000), (1, -899_500, 1_700_000)]
     queries = spark.createDataFrame(qs, "qid long, lat_e4 long, lon_e4 long")
     k = 3
-    got = spatial.knn_join(queries, points, k=k, res=6, max_rounds=2).collect()
+    got = spatial.knn_join(queries, points, k=k, res=6).collect()
     by_q: dict[int, list] = {}
     for r in got:
         by_q.setdefault(r.qid, []).append((r.neighbor_id, r.dist2, r.rank))
     for qid, qlat, qlon in qs:
         want = _knn_oracle(qlat, qlon, ids, lat, lon, k)
         assert sorted(by_q[qid], key=lambda t: t[2]) == want
+
+
+def _check_knn(spark, ids, lat, lon, qs, k, res=6):
+    """knn_join over explicit numpy points == _knn_oracle, query by query."""
+    points = spark.createDataFrame(
+        [(int(i), int(a), int(o)) for i, a, o in zip(ids, lat, lon)],
+        "id long, lat_e4 long, lon_e4 long",
+    )
+    queries = spark.createDataFrame(qs, "qid long, lat_e4 long, lon_e4 long")
+    by_q: dict[int, list] = {}
+    for r in spatial.knn_join(queries, points, k=k, res=res).collect():
+        by_q.setdefault(r.qid, []).append((r.neighbor_id, r.dist2, r.rank))
+    for qid, qlat, qlon in qs:
+        want = _knn_oracle(qlat, qlon, np.asarray(ids), np.asarray(lat),
+                           np.asarray(lon), k)
+        assert sorted(by_q.get(qid, []), key=lambda t: t[2]) == want, f"qid {qid}"
+
+
+def test_knn_metro_cluster_plus_sparse_remainder(spark, points_np):
+    """A dense cluster inside one res-6 cell beside the sparse uniform
+    points: cluster queries need ring radius 2, sparse ones far more."""
+    ids, lat, lon = points_np
+    rng = np.random.default_rng(7)
+    n = 600
+    # res-6 cell edge is 28125 e4; keep the cluster inside one cell
+    clat = 407_000 + rng.integers(-10_000, 10_000, n)
+    clon = -740_000 + rng.integers(-10_000, 10_000, n)
+    all_ids = np.concatenate([ids, np.arange(10**6, 10**6 + n)])
+    qs = [(0, 407_000, -740_000), (1, 416_000, -731_000), (2, 440_000, -740_000),
+          (3, 300_000, -700_000), (4, -500_000, 1_000_000), (5, 0, 0)]
+    _check_knn(spark, all_ids, np.concatenate([lat, clat]),
+               np.concatenate([lon, clon]), qs, k=7)
+
+
+def test_knn_fewer_points_than_k(spark):
+    """Under k points in total: every point comes back, ranked 1..n."""
+    ids, lat, lon = [11, 12, 13], [10_000, -20_000, 500_000], [0, 30_000, -900_000]
+    qs = [(0, 0, 0), (1, 890_000, 1_790_000)]
+    _check_knn(spark, ids, lat, lon, qs, k=5)
+    queries = spark.createDataFrame(qs, "qid long, lat_e4 long, lon_e4 long")
+    points = spark.createDataFrame(list(zip(ids, lat, lon)),
+                                   "id long, lat_e4 long, lon_e4 long")
+    got = spatial.knn_join(queries, points, k=5, res=6).collect()
+    assert sorted((r.qid, r.rank) for r in got) == [
+        (q, rk) for q in (0, 1) for rk in (1, 2, 3)
+    ]
+
+
+def test_knn_seam_and_polar_queries(spark, points_np):
+    """Queries on the ±180° seam (both spellings of it) and in the
+    polar rows, with points on the east edge (lon = +180, which the
+    join cell wraps to column 0)."""
+    ids, lat, lon = points_np
+    east = np.array([0, 450_000, -899_000])
+    all_ids = np.concatenate([ids, [10**7, 10**7 + 1, 10**7 + 2]])
+    qs = [(0, 0, -1_800_000), (1, 0, 1_799_999), (2, 0, 1_800_000),
+          (3, 900_000, 0), (4, -900_000, 1_799_999), (5, 899_999, -1_800_000),
+          (6, 450_000, 1_790_000), (7, -899_000, 1_800_000)]
+    _check_knn(spark, all_ids, np.concatenate([lat, east]),
+               np.concatenate([lon, np.full(3, 1_800_000)]), qs, k=4)
+    # k points on the east edge share column 0 with the west edge in
+    # the join, but are a world away from a query just east of -180
+    west = [-1_800_000 + 40_000 * j for j in range(1, 7)]
+    _check_knn(spark, list(range(10)), [0] * 10, [1_800_000] * 4 + west,
+               [(0, 0, -1_795_000), (1, 0, 1_795_000)], k=4)
+
+
+def test_knn_ties_break_by_id(spark):
+    """Equidistant points (a ring of four plus duplicates at one spot):
+    rank follows point id among equal distances."""
+    ids = [40, 10, 30, 20, 5, 6, 99]
+    lat = [100, -100, 0, 0, 5_000, 5_000, 5_000]
+    lon = [0, 0, 100, -100, 0, 0, 0]
+    qs = [(0, 0, 0), (1, 5_000, 0)]
+    _check_knn(spark, ids, lat, lon, qs, k=3)
+
+
+def test_knn_ring_radius_rule_bounds_kth_distance():
+    """The radius rule, numpy only: whenever knn_ring_radii gives a
+    cell radius R, every query point in the cell has its k-th distance
+    within (R*w_min)^2, and every point outside ring R lies farther."""
+    rng = np.random.default_rng(3)
+    checked = 0
+    for trial in range(40):
+        res = int(rng.integers(2, 5))
+        nx, ny = 2 ** (res + 1), 2**res
+        k = int(rng.integers(1, 12))
+        counts = rng.poisson(rng.uniform(0.05, 3.0), (ny, nx))
+        if trial % 4 == 0:  # a hot cell in a sparse grid
+            counts[rng.integers(ny), rng.integers(nx)] += 50
+        radii = spatial.knn_ring_radii(counts, k, res)
+        w_min, _ = spatial.knn_cell_widths(res)
+        yy, xx = np.nonzero(counts)
+        cell = geo.pack_cell(res, np.repeat(yy, counts[yy, xx]),
+                             np.repeat(xx, counts[yy, xx]))
+        lat_lo, lat_hi, lon_lo, lon_hi = geo.cell_bounds_e4(cell)
+        plat = rng.integers(lat_lo, lat_hi)
+        plon = rng.integers(lon_lo, lon_hi)
+        if counts.sum() < k:
+            assert (radii == -1).all()
+            continue
+        _, py, px = geo.unpack_cell(cell)
+        for _ in range(30):
+            qlat = int(rng.integers(-geo.LAT_MAX_E4, geo.LAT_MAX_E4 + 1))
+            qlon = int(rng.integers(-geo.LON_MAX_E4, geo.LON_MAX_E4))
+            qx, qy = (int(v) for v in geo.cell_xy(qlat, qlon, res))
+            big = int(radii[qy, qx])
+            if big < 0:
+                continue
+            assert 2 * big + 1 <= ny
+            d2 = geo.dist2_e4(qlat, qlon, plat, plon)
+            reach2 = (big * w_min) ** 2
+            assert np.sort(d2)[k - 1] <= reach2
+            outside = (np.abs(px - qx) > big) | (np.abs(py - qy) > big)
+            assert (d2[outside] > reach2).all()
+            checked += 1
+    assert checked > 300
 
 
 def test_tile_counts_vs_bruteforce(spark, points, points_np):
