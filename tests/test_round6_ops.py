@@ -56,8 +56,7 @@ def test_triangle_counts_hub_skew_orientations_agree(spark):
     orientation the hub (id 0) would own ~n^2 wedges; degree
     orientation points every star edge AT the hub (its out-degree
     drops to ~0) so wedge fan-out is bounded by the arboricity. The
-    triangle SET must be identical under both orientations and match
-    brute force."""
+    per-node counts must match brute force."""
     from inputosm_spark.operators import graph
 
     n = 60
@@ -66,17 +65,9 @@ def test_triangle_counts_hub_skew_orientations_agree(spark):
         | {(1, 2), (3, 4), (5, 6), (10, 11), (11, 12), (20, 21)}
     )
     df = spark.createDataFrame(edges, "u long, v long")
-    by_deg = {
-        r.node: r.n_tri
-        for r in graph.triangle_counts(df, degree_orient=True).collect()
-    }
-    by_id = {
-        r.node: r.n_tri
-        for r in graph.triangle_counts(df, degree_orient=False).collect()
-    }
+    got = {r.node: r.n_tri for r in graph.triangle_counts(df).collect()}
     want = _brute_triangles(edges)
-    assert by_deg == want
-    assert by_id == want
+    assert got == want
     assert want[0] >= 6  # the hub really is in many triangles
 
 
@@ -426,7 +417,9 @@ def test_label_propagation_matches_python_reference(spark):
             lab = nxt
         return lab
 
-    df = spark.createDataFrame(edges, "u long, v long")
+    df = spark.createDataFrame(
+        edges + [(v, u) for u, v in edges], "s long, d long"
+    )
     for it in (1, 3):
         got = {
             r.node: r.label
